@@ -14,8 +14,9 @@ Tables are FreqTable multisets (frequency.py); views are inlined by
 registering them as temp views built from their stored SQL in their own
 database context (recursive, cycle-guarded) — exactly the reference's
 inline-at-resolution model.  Name qualification: Spark temp views cannot
-contain dots, so ``db.table`` references are mangled to ``db__table`` and
-both spellings are registered.
+contain dots, so ``db.table`` references are mangled to ``db__table``.
+Only the relations a statement names are registered, under the spelling
+it uses, and only when their registration is stale (``_bind``).
 
 Scale: the engine layer is pure metadata + plan construction; all data
 movement is Catalyst-planned Spark jobs.  The warehouse directory can be
@@ -24,12 +25,14 @@ any Hadoop-compatible filesystem path.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
 import shutil
 import threading
 import weakref
+from collections import defaultdict
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -68,6 +71,23 @@ _FUNCTION_REGISTRY = (
     "to_bigint to_bool to_date to_decimal to_int to_json to_jsonpath to_text "
     "to_timestamp type_of"
 ).split()
+
+
+#: Registration generations.  An Engine draws a fresh one at construction
+#: and on both sides of every mutating statement; drawing from one global
+#: counter keeps a stamp made by one engine, or before a mutation, from
+#: ever passing as current for another.
+_GENERATIONS = itertools.count(1)
+
+#: SparkSession -> {temp-view name (lower case): (generation, target,
+#: DataFrame)} for the registrations the engines made on that session.
+#: Temp views are session-wide, so every Engine on a session shares one
+#: map and sees when another one rebinds a name.  ``target`` is
+#: (db, relation, kind); the DataFrame lets a view build put back a bare
+#: name it repointed (``_view_df``).
+_BOUND: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _split_name(name: str, current_db: str) -> tuple[str, str]:
@@ -205,11 +225,14 @@ class Engine:
         self.current_db = "default"
         os.makedirs(os.path.join(warehouse, "default"), exist_ok=True)
         self._dir_views = 0
-        #: catalog/temp-view registrations are stale after any DDL/DML (new
-        #: segments don't appear in an already-registered scan plan); pure
-        #: SELECT sequences skip the O(catalog) re-registration entirely
-        self._catalog_dirty = True
-        self._in_mutation = False
+        #: a registration is current only if it carries this generation:
+        #: new segments don't appear in an already-registered scan plan, so
+        #: every DDL/DML moves it on (``_dispatch``), while pure SELECT
+        #: sequences reuse what earlier statements registered
+        self._generation = next(_GENERATIONS)
+        self._bound = _BOUND.setdefault(spark, {})
+        #: (db, view) pairs whose stored SQL is being planned
+        self._building: set[tuple[str, str]] = set()
         #: group id -> kill flags of that session's live streamed results;
         #: Engine.cancel sets them so a stream blocked on the client
         #: socket (no Spark job in flight for cancelJobGroup to abort)
@@ -370,40 +393,135 @@ class Engine:
         return out
 
     # ---- registration (the resolve_tables phase) ---------------------------
-    def _register_all(self) -> None:
-        """Register every table and view as temp views (both bare and
-        db__qualified names).  Views are built from their stored SQL in
-        their own db context — the reference's inline semantics."""
-        self._register_system_tables()
-        for db in self.databases():
-            if db in self._SYSTEM_DBS:
-                continue
-            for name, kind in self.tables(db):
-                if kind != "table":
-                    continue
-                df = self._table(db, name).scan()
-                if db == self.current_db:
-                    df.createOrReplaceTempView(name)
-                df.createOrReplaceTempView(f"{db}__{name}")
-        for db in self.databases():
-            for mvname in self._mvs(db):
-                df = self._mv(db, mvname).read()
-                if db == self.current_db:
-                    df.createOrReplaceTempView(mvname)
-                df.createOrReplaceTempView(f"{db}__{mvname}")
-        seen: set[tuple[str, str]] = set()
-        for db in self.databases():
-            for vname in self._views(db):
-                self._register_view(db, vname, seen)
+    def _register_all(self, names: dict[str, tuple[str, str, str]]) -> None:
+        """Register ``names`` — temp-view name → (db, relation, kind) — as
+        Spark temp views and stamp each with the current generation.
 
-    def _register_system_tables(self) -> None:
+        The single registration entry point; ``_bind`` passes it only the
+        stale names a statement uses.  A view is planned from its stored
+        SQL in its own context db (``_view_df``), which registers the
+        view's own references first.  Every DataFrame is built before any
+        name is bound, and each target is built once even when both its
+        bare and qualified spellings are wanted."""
+        dfs = {
+            target: self._relation_df(*target)
+            for target in set(names.values())
+        }
+        for name, target in names.items():
+            dfs[target].createOrReplaceTempView(name)
+            self._bound[name] = (self._generation, target, dfs[target])
+
+    def _relation_df(self, db: str, name: str, kind: str) -> DataFrame:
+        if kind == "table":
+            return self._table(db, name).scan()
+        if kind == "mv":
+            return self._mv(db, name).read()
+        if kind == "system":
+            return self._system_table(name)
+        return self._view_df(db, name)
+
+    def _catalog(self, db: str) -> dict[str, list[tuple[str, str]]]:
+        """``db``'s relations by lower-cased name (temp-view names are
+        case-insensitive): [(name, kind)] in shadowing order — a view
+        shadows a MV of the same name, which shadows a table."""
+        if db == "incresql":
+            return {n: [(n, "system")] for n in self._SYSTEM_TABLES}
+        out: dict[str, list[tuple[str, str]]] = defaultdict(list)
+        for v in self._views(db):
+            out[v.lower()].append((v, "view"))
+        for mv in self._mvs(db):
+            out[mv.lower()].append((mv, "mv"))
+        for name, kind in self.tables(db):
+            if kind == "table":
+                out[name.lower()].append((name, "table"))
+        return out
+
+    def _referenced(self, sql: str, db: str) -> dict[str, tuple[str, str, str]]:
+        """Temp-view name → (db, relation, kind) for every catalog relation
+        a planned statement may name, in context database ``db``.
+
+        Every identifier token outside string literals counts: as a bare
+        name in ``db`` and, when it starts with ``<database>__``, as a
+        mangled qualified name.  A column that happens to share a
+        relation's name matches too — that costs a registration but is
+        never wrong, whereas a missed name would read a stale plan.  A
+        view being built gives way to the relation it shadows, so a
+        self-reference cannot recurse."""
+        masked, stash = dialect.mask_literals(sql)
+        tokens = {t.lower() for t in re.findall(_IDENT, masked)}
+        tokens |= {s[1:-1].lower() for s in stash if s.startswith("`")}
+        catalogs: dict[str, dict] = {}
+
+        def lookup(d: str, lname: str) -> tuple[str, str, str] | None:
+            if d not in catalogs:
+                catalogs[d] = self._catalog(d)
+            for name, kind in catalogs[d].get(lname, ()):
+                if kind != "view" or (d, name) not in self._building:
+                    return d, name, kind
+            return None
+
+        dbs = {d.lower() + "__": d for d in self.databases()}
+        want = {}
+        for tok in tokens:
+            hit = lookup(db, tok)
+            for prefix, d in dbs.items():
+                if tok.startswith(prefix):
+                    hit = lookup(d, tok[len(prefix):]) or hit
+            if hit is not None:
+                want[tok] = hit
+        return want
+
+    def _bind(self, want: dict[str, tuple[str, str, str]]) -> None:
+        """Register the names of ``want`` whose registration is not
+        current: stamped with an older generation, or bound to another
+        target (another engine, database or relation kind)."""
+        stale = {}
+        for name, target in want.items():
+            entry = self._bound.get(name)
+            if entry is None or entry[:2] != (self._generation, target):
+                stale[name] = target
+        if stale:
+            self._register_all(stale)
+
+    def _view_df(self, db: str, name: str) -> DataFrame:
+        """Plan view ``db.name`` from its stored SQL in its own context db:
+        the reference resolves a view's bare names there
+        (resolve_tables.rs:34-61).  The bare names it binds into that
+        context are put back afterwards, so the caller's bindings still
+        hold once the view's plan is analyzed."""
+        meta = self._views(db)[name]
+        ctx = meta["context_db"]
+        sql = self._prepare(meta["sql"], ctx)
+        saved: dict[str, tuple | None] = {}
+        self._building.add((db, name))
+        try:
+            want = self._referenced(sql, ctx)
+            saved.update((n, self._bound.get(n)) for n in want)
+            self._bind(want)
+            return self.spark.sql(sql)
+        finally:
+            self._building.discard((db, name))
+            for n, prev in saved.items():
+                if prev is not None and self._bound[n][1] != prev[1]:
+                    prev[2].createOrReplaceTempView(n)
+                    self._bound[n] = prev
+
+    def _system_table(self, name: str) -> DataFrame:
         """The reference's bootstrap catalog (catalog/src/bootstrap.rs:22-66)
         as queryable views: ``incresql.databases(name)``,
         ``incresql.tables(database_name, name, type, sql, sql_context,
         table_id, columns, system)``, ``incresql.prefix_tables``.  Driver-side
         metadata only — row counts are O(catalog), never O(data)."""
         spark = self.spark
-        dbs = [(d,) for d in self.databases()]
+        if name == "databases":
+            return spark.createDataFrame(
+                [(d,) for d in self.databases()], "name string"
+            )
+        if name == "prefix_tables":
+            return spark.createDataFrame(
+                [(tid, None, None) for _, tid in sorted(self._SYSTEM_TABLES.items())],
+                "table_id bigint, column_len int, pk_sort string",
+            )
         trows: list[tuple] = [
             ("incresql", n, "table", None, None, tid, None, True)
             for n, tid in sorted(self._SYSTEM_TABLES.items())
@@ -411,86 +529,25 @@ class Engine:
         for db in self.databases():
             if db in self._SYSTEM_DBS:
                 continue
-            for name, kind in self.tables(db):
+            for rel, kind in self.tables(db):
                 if kind == "view":
-                    meta = self._views(db)[name]
+                    meta = self._views(db)[rel]
                     trows.append(
-                        (db, name, "view", meta["sql"], meta["context_db"],
+                        (db, rel, "view", meta["sql"], meta["context_db"],
                          None, None, False)
                     )
                 else:
                     cols = json.dumps(
                         [[f.name, f.dataType.simpleString()]
-                         for f in self._table(db, name).schema().fields]
+                         for f in self._table(db, rel).schema().fields]
                     )
-                    trows.append((db, name, "table", None, None, None, cols, False))
-        prows = [(tid, None, None) for _, tid in sorted(self._SYSTEM_TABLES.items())]
-        for df, name in (
-            (spark.createDataFrame(dbs, "name string"), "databases"),
-            (
-                spark.createDataFrame(
-                    trows,
-                    "database_name string, name string, type string, sql string,"
-                    " sql_context string, table_id bigint, columns string,"
-                    " system boolean",
-                ),
-                "tables",
-            ),
-            (
-                spark.createDataFrame(
-                    prows, "table_id bigint, column_len int, pk_sort string"
-                ),
-                "prefix_tables",
-            ),
-        ):
-            if self.current_db == "incresql":
-                df.createOrReplaceTempView(name)
-            df.createOrReplaceTempView(f"incresql__{name}")
-
-    def _register_bare(self, db: str) -> None:
-        """Point bare (unqualified) temp-view names at ``db``'s tables —
-        the reference resolves a view's bare names in the view's own
-        context database (resolve_tables.rs:34-61)."""
-        if db in self._SYSTEM_DBS:
-            self._register_system_tables()
-            return
-        for name, kind in self.tables(db):
-            if kind == "table":
-                self._table(db, name).scan().createOrReplaceTempView(name)
-            else:
-                try:
-                    self.spark.table(f"{db}__{name}").createOrReplaceTempView(name)
-                except Exception:
-                    pass  # dependent view not registered yet
-        for mvname in self._mvs(db):
-            self._mv(db, mvname).read().createOrReplaceTempView(mvname)
-
-    def _register_view(self, db: str, name: str, seen: set) -> None:
-        if (db, name) in seen:
-            return
-        seen.add((db, name))
-        meta = self._views(db)[name]
-        ctx = meta["context_db"]
-        sql = self._qualify(meta["sql"], ctx)
-        rewritten = dialect.rewrite(sql, ctx, self._register_dir)
-        try:
-            df = self.spark.sql(rewritten)
-        except Exception:
-            if ctx == self.current_db:
-                raise
-            # bare names in the view body resolve in ITS context db, not the
-            # session's — re-register bare names there, build, then restore
-            saved = self.current_db
-            self.current_db = ctx
-            try:
-                self._register_bare(ctx)
-                df = self.spark.sql(rewritten)
-            finally:
-                self.current_db = saved
-                self._register_bare(saved)
-        if db == self.current_db:
-            df.createOrReplaceTempView(name)
-        df.createOrReplaceTempView(f"{db}__{name}")
+                    trows.append((db, rel, "table", None, None, None, cols, False))
+        return spark.createDataFrame(
+            trows,
+            "database_name string, name string, type string, sql string,"
+            " sql_context string, table_id bigint, columns string,"
+            " system boolean",
+        )
 
     #: tokens after ``FROM db.tbl`` that are clauses, not aliases
     _NON_ALIAS = frozenset(
@@ -564,24 +621,26 @@ class Engine:
             self._int_types = types
         return self._int_types.get(column)
 
-    def _run_select(self, sql: str) -> DataFrame:
-        if self._catalog_dirty:
-            self._register_all()
-            # a mutating statement (INSERT ... SELECT, CREATE VIEW) may call
-            # this mid-flight; its own mutation keeps the catalog dirty
-            if not self._in_mutation:
-                self._catalog_dirty = False
+    def _prepare(
+        self, sql: str, db: str,
+        int_col_type: Callable[[str], str | None] | None = None,
+    ) -> str:
+        """Reference-dialect SQL → Spark SQL in context database ``db``."""
         # sketch table functions (hll_distinct / quantile_sketch /
         # cms_topk / kmv_set_ops / bm25_search ...) expand to derived
         # tables BEFORE qualification, so the generated FROM <table>
         # resolves through the catalog like any other source
         # (sketch_sql.py; round-15 wire surface, completed round 17).
         sql = sketch_sql.expand_sketch_calls(sql)
-        rewritten = dialect.rewrite(
-            self._qualify(sql, self.current_db), self.current_db,
-            self._register_dir, int_col_type=self._int_col_type,
+        return dialect.rewrite(
+            self._qualify(sql, db), db, self._register_dir,
+            int_col_type=int_col_type,
         )
-        return self.spark.sql(rewritten)
+
+    def _run_select(self, sql: str) -> DataFrame:
+        sql = self._prepare(sql, self.current_db, self._int_col_type)
+        self._bind(self._referenced(sql, self.current_db))
+        return self.spark.sql(sql)
 
     #: statement prefixes that invalidate registered temp views
     _MUTATING = (
@@ -676,12 +735,20 @@ class Engine:
                 sc.setLocalProperty(key, None)
 
     def _dispatch(self, s: str, stream: bool = False) -> EngineResult:
-        u = s.upper()
-        self._in_mutation = u.startswith(self._MUTATING)
-        if self._in_mutation:
-            self._catalog_dirty = True
-            self._int_types = None
+        if not s.upper().startswith(self._MUTATING):
+            return self._statement(s, stream)
+        # a mutation outdates every registration made before it, and also
+        # those it makes itself (INSERT ... SELECT, CREATE VIEW validation)
+        # while the data or catalog under them is still changing
+        self._generation = next(_GENERATIONS)
+        self._int_types = None
+        try:
+            return self._statement(s, stream)
+        finally:
+            self._generation = next(_GENERATIONS)
 
+    def _statement(self, s: str, stream: bool) -> EngineResult:
+        u = s.upper()
         if u.startswith("CREATE DATABASE"):
             name = s.split()[2]
             os.makedirs(self._db_path(name), exist_ok=True)

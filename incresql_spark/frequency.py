@@ -71,22 +71,36 @@ def _observed_metric(obs: Observation, key: str, default):
         # row at all — either way no value exists to read, which is
         # precisely the "zero rows flowed" case whose correct answer is
         # ``default``.  A row that DOES carry values means the failure
-        # was something else — re-raise.  The message match stays as a
-        # fallback for when the private ``_jo`` accessor itself drifts.
+        # was something else — re-raise.  An empty row alone is not
+        # enough either: an interrupt or a lost connection raised from
+        # the blocking read of a never-fired observation also sees one,
+        # so the exception must be the conversion assertion itself.  The
+        # message match stays as a fallback for when the class check or
+        # the private ``_jo`` accessor drifts.
         empty = None  # None: probe unavailable (API drift)
         try:
             opt = obs._jo.getRowOrEmpty()
             empty = bool(opt.isEmpty() or opt.get().size() == 0)
         except Exception:  # noqa: BLE001 — probe is best-effort
             empty = None
-        if empty is not None:
-            if empty:
-                return default
+        if empty is False:
             raise  # metrics row exists — the read failure is real
+        if empty and _is_row_conversion_error(exc):
+            return default
         msg = str(exc)
         if "toPyRow" in msg and "assertion failed" in msg:
             return default
         raise
+
+
+def _is_row_conversion_error(exc: Exception) -> bool:
+    """Whether ``exc`` is the JVM row conversion's assertion — what
+    ``Observation.get`` raises on an empty metrics row: a py4j error
+    wrapping ``java.lang.AssertionError``, whatever its message says."""
+    java = getattr(exc, "java_exception", None)
+    if java is None:
+        return False
+    return java.getClass().getName() == "java.lang.AssertionError"
 
 
 def _type_from_str(s: str) -> T.DataType:

@@ -940,10 +940,14 @@ class MaterializedView:
                             # unstarted, else retrieve its exception and
                             # chain it so a concurrent changelog failure
                             # is surfaced instead of discarded by the
-                            # pool exit (r19 advice)
+                            # pool exit (r19 advice).  When the barrier
+                            # itself re-raised the changelog error, the
+                            # two are one exception: never chain it to
+                            # itself.
                             if not fut.cancel():
                                 log_exc = fut.exception()
-                                if log_exc is not None:
+                                if (log_exc is not None
+                                        and log_exc is not staging_exc):
                                     raise staging_exc from log_exc
                             raise
                 else:

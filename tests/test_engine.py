@@ -223,3 +223,192 @@ def test_embedded_collect_fence(engine, spark):
         assert [v for (v,) in res.rows] == list(range(10))
     finally:
         spark.conf.unset(EMBEDDED_MAX_COLLECT_CONF)
+
+
+# Lazy registration: a statement registers only the relations it names,
+# and only when their registration predates the last mutation.  Each test
+# below first registers a name, then mutates, then asserts the next
+# SELECT through that name sees the new rows.
+def rows(e: Engine, sql: str) -> list[tuple]:
+    return sorted(e.execute_statement(sql).rows)
+
+
+def test_stale_bare_table(engine):
+    engine.execute_statement("CREATE TABLE lz (a INT)")
+    engine.execute_statement("INSERT INTO lz VALUES (1)")
+    assert rows(engine, "SELECT a FROM lz") == [(1,)]
+    engine.execute_statement("INSERT INTO lz VALUES (2)")
+    assert rows(engine, "SELECT a FROM lz") == [(1,), (2,)]
+
+
+def test_stale_qualified_table(engine):
+    engine.execute_statement("CREATE DATABASE lzdb")
+    engine.execute_statement("CREATE TABLE lzdb.lq (a INT)")
+    engine.execute_statement("INSERT INTO lzdb.lq VALUES (1)")
+    assert rows(engine, "SELECT a FROM lzdb.lq") == [(1,)]
+    engine.execute_statement("INSERT INTO lzdb.lq VALUES (2)")
+    assert rows(engine, "SELECT a FROM lzdb.lq") == [(1,), (2,)]
+
+
+def test_stale_view_over_table(engine):
+    engine.execute_statement("CREATE TABLE lvt (a INT)")
+    engine.execute_statement("INSERT INTO lvt VALUES (1)")
+    engine.execute_statement("CREATE VIEW lv AS SELECT a * 10 AS b FROM lvt")
+    assert rows(engine, "SELECT b FROM lv") == [(10,)]
+    engine.execute_statement("INSERT INTO lvt VALUES (2)")
+    assert rows(engine, "SELECT b FROM lv") == [(10,), (20,)]
+
+
+def test_stale_view_in_other_context_db(engine):
+    """The view's bare ``src`` resolves in its context db even though the
+    session's db has its own ``src``, and the session's ``src`` is intact
+    in the same statement afterwards."""
+    engine.execute_statement("CREATE DATABASE ctx")
+    engine.execute_statement("CREATE TABLE ctx.src (c TEXT)")
+    engine.execute_statement("INSERT INTO ctx.src VALUES ('a')")
+    engine.execute_statement("CREATE TABLE src (c TEXT)")
+    engine.execute_statement("INSERT INTO src VALUES ('session')")
+    engine.execute_statement("USE ctx")
+    engine.execute_statement("CREATE VIEW default.cv AS SELECT c FROM src")
+    engine.execute_statement("USE default")
+    both = "SELECT c FROM cv UNION ALL SELECT c FROM src"
+    assert rows(engine, both) == [("a",), ("session",)]
+    engine.execute_statement("INSERT INTO ctx.src VALUES ('b')")
+    # ``src`` is current when the view is rebuilt in the next statement
+    assert rows(engine, "SELECT c FROM src") == [("session",)]
+    assert rows(engine, both) == [("a",), ("b",), ("session",)]
+
+
+def test_view_over_same_named_table(engine):
+    """A view shadows the table it is named after; inside its own body the
+    name falls through to that table instead of recursing."""
+    engine.execute_statement("CREATE TABLE sh (a INT)")
+    engine.execute_statement("INSERT INTO sh VALUES (1)")
+    engine.execute_statement("CREATE VIEW sh AS SELECT a + 100 AS a FROM sh")
+    assert rows(engine, "SELECT a FROM sh") == [(101,)]
+    engine.execute_statement("INSERT INTO sh VALUES (2)")
+    assert rows(engine, "SELECT a FROM sh") == [(101,), (102,)]
+
+
+def test_stale_view_over_view(engine):
+    engine.execute_statement("CREATE TABLE vvt (a INT)")
+    engine.execute_statement("INSERT INTO vvt VALUES (1), (-1)")
+    engine.execute_statement("CREATE VIEW vv1 AS SELECT a FROM vvt WHERE a > 0")
+    engine.execute_statement("CREATE VIEW vv2 AS SELECT a + 1 AS b FROM vv1")
+    assert rows(engine, "SELECT b FROM vv2") == [(2,)]
+    engine.execute_statement("INSERT INTO vvt VALUES (5), (-5)")
+    assert rows(engine, "SELECT b FROM vv2") == [(2,), (6,)]
+
+
+def test_stale_mv_after_refresh(engine):
+    engine.execute_statement("CREATE TABLE mvt (g TEXT, v INT)")
+    engine.execute_statement("INSERT INTO mvt VALUES ('x', 1)")
+    engine.execute_statement(
+        "CREATE MATERIALIZED VIEW lmv AS SELECT g, sum(v) AS s FROM mvt GROUP BY g"
+    )
+    assert rows(engine, "SELECT g, s FROM lmv") == [("x", 1)]
+    engine.execute_statement("INSERT INTO mvt VALUES ('x', 2), ('y', 5)")
+    engine.execute_statement("REFRESH MATERIALIZED VIEW lmv")
+    assert rows(engine, "SELECT g, s FROM lmv") == [("x", 3), ("y", 5)]
+
+
+def test_stale_system_tables_after_create(engine):
+    q_tables = (
+        "SELECT name FROM incresql.tables WHERE database_name = 'default'"
+    )
+    engine.execute_statement("CREATE TABLE st1 (a INT)")
+    assert rows(engine, q_tables) == [("st1",)]
+    engine.execute_statement("CREATE TABLE st2 (a INT)")
+    assert rows(engine, q_tables) == [("st1",), ("st2",)]
+
+
+def test_stale_insert_select_source(engine):
+    engine.execute_statement("CREATE TABLE iss (a INT)")
+    engine.execute_statement("CREATE TABLE isd (a INT)")
+    engine.execute_statement("INSERT INTO iss VALUES (1)")
+    assert rows(engine, "SELECT a FROM iss") == [(1,)]
+    engine.execute_statement("INSERT INTO iss VALUES (2)")
+    engine.execute_statement("INSERT INTO isd SELECT a FROM iss")
+    assert rows(engine, "SELECT a FROM isd") == [(1,), (2,)]
+    # the source registered mid-statement is stale once the insert lands
+    engine.execute_statement("INSERT INTO isd SELECT a + 10 FROM isd")
+    assert rows(engine, "SELECT a FROM isd") == [(1,), (2,), (11,), (12,)]
+
+
+def test_stale_sketch_table_function(engine):
+    """The table name sits inside a string literal until the sketch call
+    expands, so only the expanded SQL can name it."""
+    engine.execute_statement("CREATE TABLE lineitem (l_orderkey INT)")
+    engine.execute_statement("INSERT INTO lineitem VALUES (1), (2), (3)")
+    sketch = "SELECT occupied FROM hll_distinct('lineitem', 'l_orderkey')"
+    assert rows(engine, sketch) == [(3,)]
+    engine.execute_statement("INSERT INTO lineitem VALUES (4), (5), (6)")
+    assert rows(engine, sketch) == [(6,)]
+
+
+def test_stale_bare_name_after_use(engine):
+    engine.execute_statement("CREATE DATABASE db2")
+    engine.execute_statement("CREATE TABLE u (a INT)")
+    engine.execute_statement("CREATE TABLE db2.u (a INT)")
+    engine.execute_statement("INSERT INTO u VALUES (1)")
+    engine.execute_statement("INSERT INTO db2.u VALUES (20)")
+    assert rows(engine, "SELECT a FROM u") == [(1,)]
+    engine.execute_statement("USE db2")
+    assert rows(engine, "SELECT a FROM u") == [(20,)]
+    engine.execute_statement("INSERT INTO u VALUES (21)")
+    assert rows(engine, "SELECT a FROM u") == [(20,), (21,)]
+
+
+def test_registration_reads_only_named_relations(engine, monkeypatch):
+    """Counts, not timings: an INSERT ... VALUES registers nothing, a
+    SELECT on one MV reads that MV and scans no base table, and a repeat
+    SELECT with no mutation in between registers nothing at all."""
+    from incresql_spark.frequency import FreqTable
+    from incresql_spark.materialize import MaterializedView
+
+    engine.execute_statement("CREATE TABLE ct (g TEXT, v INT)")
+    engine.execute_statement("INSERT INTO ct VALUES ('x', 1)")
+    for name in ("cm1", "cm2"):
+        engine.execute_statement(
+            f"CREATE MATERIALIZED VIEW {name} AS "
+            "SELECT g, sum(v) AS s FROM ct GROUP BY g"
+        )
+    engine.execute_statement("SELECT * FROM cm1")
+    engine.execute_statement("INSERT INTO ct VALUES ('y', 2)")
+
+    calls: dict[str, list] = {"scan": [], "read": [], "register": []}
+    real_scan, real_read = FreqTable.scan, MaterializedView.read
+    real_register = Engine._register_all
+    in_read = []
+
+    # a MV read derives its state schema from a zero-row base scan plan;
+    # that scan is the view's own, so only scans outside a read count
+    def scan(self, *a, **k):
+        if not in_read:
+            calls["scan"].append(self.path)
+        return real_scan(self, *a, **k)
+
+    def read(self):
+        calls["read"].append(self.name)
+        in_read.append(self.name)
+        try:
+            return real_read(self)
+        finally:
+            in_read.pop()
+
+    def register(self, names, *a, **k):
+        calls["register"].append(sorted(names))
+        return real_register(self, names, *a, **k)
+
+    monkeypatch.setattr(FreqTable, "scan", scan)
+    monkeypatch.setattr(MaterializedView, "read", read)
+    monkeypatch.setattr(Engine, "_register_all", register)
+
+    engine.execute_statement("INSERT INTO ct VALUES ('z', 3)")
+    assert calls == {"scan": [], "read": [], "register": []}
+
+    assert rows(engine, "SELECT * FROM cm1") == [("x", 1)]
+    assert calls == {"scan": [], "read": ["cm1"], "register": [["cm1"]]}
+
+    engine.execute_statement("SELECT g FROM cm1")
+    assert calls == {"scan": [], "read": ["cm1"], "register": [["cm1"]]}

@@ -337,18 +337,55 @@ class _FakeObs:
         raise self._exc
 
 
+class _FakeJavaError(Exception):
+    """A py4j-style error: ``java_exception`` is the wrapped JVM exception,
+    of class ``java_class``."""
+
+    def __init__(self, msg, java_class="java.lang.AssertionError"):
+        super().__init__(msg)
+
+        class _Cls:
+            def getName(self):
+                return java_class
+
+        class _Java:
+            def getClass(self):
+                return _Cls()
+
+        self.java_exception = _Java()
+
+
 def test_observed_metric_tolerates_empty_row_under_any_message():
     from incresql_spark.frequency import _observed_metric
 
     # future Spark rewords the row-conversion failure entirely: the
-    # structural probe (empty metrics row) still classifies it as the
-    # zero-task case
-    obs = _FakeObs(RuntimeError("SOME_NEW_ERROR_CLASS: cannot convert"),
+    # structural probe (empty metrics row) plus the exception's JVM class
+    # (the conversion assertion) still classify it as the zero-task case
+    obs = _FakeObs(_FakeJavaError("SOME_NEW_ERROR_CLASS: cannot convert"),
                    _FakeJo(_FakeOpt(empty=False, size=0)))
     assert _observed_metric(obs, "n", default=0) == 0
     # absent row (option empty) is equally the never-fired signature
-    obs = _FakeObs(RuntimeError("whatever"), _FakeJo(_FakeOpt(empty=True)))
+    obs = _FakeObs(_FakeJavaError("whatever"), _FakeJo(_FakeOpt(empty=True)))
     assert _observed_metric(obs, "n", default=7) == 7
+
+
+def test_observed_metric_reraises_non_conversion_error_on_empty_row():
+    from incresql_spark.frequency import _observed_metric
+
+    # an interrupt or a lost connection raised from the blocking read of
+    # a never-fired observation also finds the metrics row empty — only
+    # the conversion assertion means "zero rows flowed"
+    for exc in (RuntimeError("connection reset"),
+                _FakeJavaError("interrupted",
+                               java_class="java.lang.InterruptedException")):
+        for opt in (_FakeOpt(empty=True), _FakeOpt(empty=False, size=0)):
+            obs = _FakeObs(exc, _FakeJo(opt))
+            try:
+                _observed_metric(obs, "n", default=0)
+            except Exception as got:  # noqa: BLE001
+                assert got is exc
+            else:
+                raise AssertionError("expected re-raise")
 
 
 def test_observed_metric_reraises_when_metrics_row_exists():

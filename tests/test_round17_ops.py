@@ -691,3 +691,27 @@ def test_staging_failure_surfaces_concurrent_changelog_error(
         mv.refresh()
     assert exc_info.value.__cause__ is not None
     assert "changelog exploded" in str(exc_info.value.__cause__)
+
+
+def test_changelog_failure_is_not_chained_to_itself(spark, tmp_path, monkeypatch):
+    """When the changelog emit itself raises, the pre_publish barrier
+    re-raises that very exception out of write_buckets: the refresh must
+    surface it as is, never chained as its own cause."""
+    base, mv = _tiny_changelog_mv(spark, tmp_path)
+    base.insert(spark.createDataFrame([("a", 1), ("b", 2)], "g string, v long"))
+    mv.refresh()
+    st_cur = mv._state_cursor()
+    base.insert(spark.createDataFrame([("a", 5)], "g string, v long"))
+
+    def boom_changelog(old, new, cursor):
+        raise RuntimeError("changelog exploded")
+
+    monkeypatch.setattr(mv, "_emit_changelog", boom_changelog)
+    import pytest
+
+    with pytest.raises(RuntimeError, match="changelog exploded") as exc_info:
+        mv.refresh()
+    exc = exc_info.value
+    assert exc.__cause__ is not exc
+    # the barrier kept the state commit from publishing
+    assert mv._state_cursor() == st_cur
